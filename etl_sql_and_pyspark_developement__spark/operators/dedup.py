@@ -6,9 +6,10 @@ Four tiers, from cheapest to fuzziest:
 - n-gram Jaccard: exact set similarity over word 3-gram shingles —
   the *verifier*, quadratic in candidate count, so only ever run on
   candidate pairs.
-- MinHash + LSH: the 100 TB path. Signatures are computed JVM-side
-  (no Python UDF): two md5-derived 32-bit halves per shingle, then
-  128 mixes minhash_j = min((a1_j*hi + a2_j*lo + b_j) mod p).
+- MinHash + LSH: the 100 TB path. Spark computes two md5-derived
+  32-bit halves per shingle; one mapInArrow NumPy kernel then takes
+  the 128 mixes minhash_j = min((a1_j*hi + a2_j*lo + b_j) mod p) as
+  int64 column batches per doc and emits the band keys directly.
   Banding turns near-duplicate search into an equi-join on
   (band_id, band-tuple key) — the only shuffle — and candidates are
   then verified with exact Jaccard. Everything is deterministic md5
@@ -24,7 +25,7 @@ the training-data-pipeline extensions SURVEY §2 lists as first-class.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 N_MINHASH = 128
@@ -79,20 +80,6 @@ def _with_base_fingerprint(sh: DataFrame) -> DataFrame:
     ).withColumn(
         "__lo", F.conv(F.substring("__md5", 9, 8), 16, 10).cast("long")
     )
-
-
-def _minhash_aggs() -> list[Column]:
-    # Single F.expr per agg, not composed Column objects: building the
-    # 128-expression tree through py4j one operator at a time costs
-    # ~2s of DRIVER time per query (measured); one parse call each is
-    # ~50ms total. Identical arithmetic, identical plan.
-    return [
-        F.expr(
-            f"min(pmod({_MIX_A1[j]} * __hi + {_MIX_A2[j]} * __lo"
-            f" + {_MIX_B[j]}, {_MERSENNE_P}))"
-        ).alias(f"mh_{j}")
-        for j in range(N_MINHASH)
-    ]
 
 
 def shingle_df(
@@ -319,6 +306,118 @@ def jaccard_pairs_prefix(
     )
 
 
+def _minhash_kernel(sh: DataFrame, bands: bool) -> DataFrame:
+    """One mapInArrow pass from a shingle frame to per-doc minhashes:
+    (doc, band_id, band_hash) when ``bands``, else (doc, mh_0..mh_127).
+
+    The md5/conv base fingerprint stays in Spark; (doc, __hi, __lo) is
+    hash-partitioned by doc so every doc's shingles meet in one
+    partition, and the kernel computes the 128 mixes
+    (a1_j*hi + a2_j*lo + b_j) mod p in int64 — a < 2^29 and halves
+    < 2^32, so every sum is < 2^62: no overflow, and pmod of a
+    non-negative value is plain %. Per-doc minima are folded per batch,
+    then across the partition's batches, so a doc split over several
+    Arrow batches (maxRecordsPerBatch) still gets one row. SQL min()
+    semantics carry over: NULL shingles (NULL text) are ignored, a doc
+    with only NULL shingles gets NULL minhashes, and NULL doc ids form
+    one group. Band keys pack each band's 4 minhashes 15 bits apiece
+    into one BIGINT (see minhash_bands). Values equal the retired
+    128-aggregate SQL form exactly (parity test in tests/test_dedup.py).
+    A partition's fold holds 128 int64 per doc it owns (1 KiB/doc), so
+    memory scales with docs per shuffle partition, as the aggregate's
+    hash map did.
+    """
+    from pyspark.sql.types import IntegerType, LongType, StructField, StructType
+
+    a1, a2, b0, p = _MIX_A1, _MIX_A2, _MIX_B, _MERSENNE_P
+    n_bands, rows = N_BANDS, N_MINHASH // N_BANDS
+    doc_field = StructField("doc", sh.schema["doc"].dataType)
+    if bands:
+        schema = StructType(
+            [
+                doc_field,
+                StructField("band_id", IntegerType()),
+                StructField("band_hash", LongType()),
+            ]
+        )
+    else:
+        schema = StructType(
+            [doc_field]
+            + [StructField(f"mh_{j}", LongType()) for j in range(N_MINHASH)]
+        )
+    names = schema.fieldNames()
+    out_docs = 8192  # bounds an output batch at 8192 docs x 32 bands
+
+    def kernel(batches):
+        import numpy as np
+        import pyarrow as pa
+        import pyarrow.compute as pc
+
+        A1 = np.array(a1, dtype=np.int64)
+        A2 = np.array(a2, dtype=np.int64)
+        B = np.array(b0, dtype=np.int64)
+
+        def fold(docs, vals):
+            # per-doc column minima of vals; NULL doc ids are one group
+            enc = pc.dictionary_encode(docs, null_encoding="encode")
+            codes = enc.indices.to_numpy()
+            order = np.argsort(codes, kind="stable")
+            codes = codes[order]
+            starts = np.flatnonzero(np.r_[True, codes[1:] != codes[:-1]])
+            return (
+                enc.dictionary.take(pa.array(codes[starts])),
+                np.minimum.reduceat(vals[order], starts, axis=0),
+            )
+
+        parts = []
+        for batch in batches:
+            if batch.num_rows == 0:
+                continue
+            hi, lo = batch.column(1), batch.column(2)
+            mix = (
+                pc.fill_null(hi, 0).to_numpy()[:, None] * A1
+                + pc.fill_null(lo, 0).to_numpy()[:, None] * A2
+                + B
+            ) % p
+            # p exceeds every mix: a NULL shingle never wins a min
+            mix[hi.is_null().to_numpy(zero_copy_only=False)] = p
+            parts.append(fold(batch.column(0), mix))
+        if not parts:
+            return
+        docs, mins = (
+            parts[0]
+            if len(parts) == 1
+            else fold(
+                pa.concat_arrays([d for d, _ in parts]),
+                np.vstack([m for _, m in parts]),
+            )
+        )
+        null = mins == p
+        if bands:
+            shift = np.arange(rows, dtype=np.int64) * 15
+            keys = (
+                (mins % (1 << 15)).reshape(-1, n_bands, rows) << shift
+            ).sum(axis=2)
+            knull = null.reshape(-1, n_bands, rows).any(axis=2)
+        for s in range(0, len(docs), out_docs):
+            e = min(s + out_docs, len(docs))
+            if bands:
+                cols = [
+                    docs.take(pa.array(np.repeat(np.arange(s, e), n_bands))),
+                    pa.array(np.tile(np.arange(n_bands, dtype=np.int32), e - s)),
+                    pa.array(keys[s:e].ravel(), mask=knull[s:e].ravel()),
+                ]
+            else:
+                cols = [docs.slice(s, e - s)] + [
+                    pa.array(mins[s:e, j], mask=null[s:e, j])
+                    for j in range(mins.shape[1])
+                ]
+            yield pa.RecordBatch.from_arrays(cols, names=names)
+
+    fps = _with_base_fingerprint(sh).select("doc", "__hi", "__lo")
+    return fps.repartition("doc").mapInArrow(kernel, schema)
+
+
 def minhash_signatures(
     df: DataFrame,
     id_col: str,
@@ -326,19 +425,21 @@ def minhash_signatures(
     n: int = 3,
     sh: DataFrame | None = None,
 ) -> DataFrame:
-    """128 minhash values per doc, computed as 128 parallel MIN
-    aggregates of universal-hash mixes of one base fingerprint per
-    shingle — all JVM-side partial aggregation, zero Python.
+    """(doc, mh_0..mh_127): 128 minhash values per doc, from the same
+    mapInArrow kernel as minhash_bands (see _minhash_kernel). Used where
+    the signatures are re-banded (lsh_band_sweep); band-table consumers
+    call minhash_bands.
 
     Pass ``sh`` to reuse a shingle frame the caller already built
     (see jaccard_pairs_prefix)."""
     if sh is None:
         sh = shingle_df(df, id_col, text_col, n)
-    return _with_base_fingerprint(sh).groupBy("doc").agg(*_minhash_aggs())
+    return _minhash_kernel(sh, bands=False)
 
 
-def _banded(sigs: DataFrame) -> DataFrame:
-    """(doc, band_id, band_hash) LSH band table from a signature frame.
+def minhash_bands(sh: DataFrame) -> DataFrame:
+    """(doc, band_id, band_hash) LSH band table from a shingle frame —
+    32 rows per doc, straight from the signature kernel.
 
     band key = the 4 minhash values packed into ONE BIGINT (15 low
     bits each, 60 bits total). Packing can only MERGE distinct tuples
@@ -348,27 +449,7 @@ def _banded(sigs: DataFrame) -> DataFrame:
     exactly. A long key shuffles ~10x fewer bytes than the
     concatenated-tuple string and avoids Spark-only xxhash64.
     """
-    rows_per_band = N_MINHASH // N_BANDS
-
-    def _band_key(b: int) -> Column:
-        return F.expr(
-            " + ".join(
-                f"pmod(mh_{b * rows_per_band + r}, {1 << 15})"
-                f" * {1 << (15 * r)}"
-                for r in range(rows_per_band)
-            )
-        )
-
-    band_cols = [
-        F.struct(
-            F.lit(b).alias("band_id"),
-            _band_key(b).alias("band_hash"),
-        )
-        for b in range(N_BANDS)
-    ]
-    return sigs.select(
-        "doc", F.explode(F.array(*band_cols)).alias("band")
-    ).select("doc", "band.band_id", "band.band_hash")
+    return _minhash_kernel(sh, bands=True)
 
 
 def cap_hot_bands(banded: DataFrame, max_band_df: int) -> DataFrame:
@@ -415,16 +496,17 @@ def lsh_candidate_pairs(
     of their TEXT, so near-identical docs are found regardless of how
     far apart their ids are (the property id-range blocking lacks).
 
-    Scale: signatures are one groupBy shuffle; banding is narrow; the
-    self-join is an equi-join on (band_id, band_hash) — bucketed,
-    never all-pairs. Pass `max_band_df` to arm the hot-bucket guard
+    Scale: signatures and band keys are one shuffle (by doc) into the
+    Arrow kernel (minhash_bands); the self-join is an equi-join on
+    (band_id, band_hash) — bucketed, never all-pairs. Pass `max_band_df` to arm the hot-bucket guard
     (cap_hot_bands) on corpora with templated/boilerplate text, which
     bounds per-bucket pair work at the cost of mega-bucket recall.
     Pass ``sh`` to reuse a caller-materialized shingle frame (see
     jaccard_pairs_prefix).
     """
-    sigs = minhash_signatures(df, id_col, text_col, n, sh=sh)
-    banded = _banded(sigs)
+    if sh is None:
+        sh = shingle_df(df, id_col, text_col, n)
+    banded = minhash_bands(sh)
     if max_band_df is not None:
         banded = cap_hot_bands(banded, max_band_df)
     banded = _materialize(banded)
@@ -452,10 +534,10 @@ def minhash_lsh_pairs(
 ) -> DataFrame:
     """MinHash+LSH candidate generation → exact Jaccard verification.
 
-    Scale path: signatures are one shuffle (groupBy doc); banding
-    explodes 32 narrow rows per doc; the bucket groupBy is the only
-    wide shuffle, keyed by (band_id, band_hash) which is uniform by
-    construction (hash values) on natural text — templated/boilerplate
+    Scale path: signatures are one shuffle (by doc) into the Arrow
+    kernel, which emits 32 band rows per doc; the bucket join is the
+    other wide shuffle, keyed by (band_id, band_hash) which is uniform
+    by construction (hash values) on natural text — templated/boilerplate
     corpora can still collapse a band value onto many docs, so
     `max_band_df` arms the cap_hot_bands guard. Verification touches
     only candidate pairs.
@@ -463,12 +545,11 @@ def minhash_lsh_pairs(
     # One shingle pass feeds signatures, sizes, and candidate
     # verification — materialize it (reused 4×).
     sh = _materialize(shingle_df(df, id_col, text_col, n))
-    sigs = _with_base_fingerprint(sh).groupBy("doc").agg(*_minhash_aggs())
-    banded = _banded(sigs)
+    banded = minhash_bands(sh)
     if max_band_df is not None:
         banded = cap_hot_bands(banded, max_band_df)
     # The candidate self-join references `banded` twice — materialize
-    # so the 128-min-agg signature groupBy does not execute once PER
+    # so the signature kernel and its shuffle do not execute once PER
     # SIDE (measured ~2.8s of the 6.6s execution at sf0.1).
     banded = _materialize(banded)
     a = banded.alias("a")
@@ -539,9 +620,9 @@ def simhash_signatures(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
             "lo", F.conv(F.substring("__md5", 9, 8), 16, 10).cast("long")
         )
     )
-    # Single F.expr per column (see _minhash_aggs): composing these 64
-    # sums + 4 chunk folds operator-by-operator costs ~1.5s of driver
-    # py4j time per query.
+    # Single F.expr per column: composing these 64 sums + 4 chunk folds
+    # operator-by-operator through py4j costs ~1.5s of driver time per
+    # query; one parse call each is ~50ms total.
     bit_sums = [
         F.expr(
             "sum(case when (({col} >> {sh}) & 1) = 1 then 1 else -1 end)".format(
@@ -1139,9 +1220,7 @@ def corpus_neardup_index(
     rescanned (the same never-rescan contract as st08's exact-
     fingerprint ingest, lifted to NEAR-duplicates)."""
     sh = shingle_df(corpus, id_col, text_col, n).persist()
-    bands = _banded(
-        _with_base_fingerprint(sh).groupBy("doc").agg(*_minhash_aggs())
-    ).persist()
+    bands = minhash_bands(sh).persist()
     sizes = sh.groupBy("doc").agg(F.count("*").alias("n_sh"))
     return {"bands": bands, "shingles": sh, "sizes": sizes}
 
@@ -1176,9 +1255,7 @@ def neardup_screen(
     sh_b = shingle_df(batch, id_col, text_col, n, spread=False).persist()
     if cache_handles is not None:
         cache_handles.append(sh_b)
-    bands_b = _banded(
-        _with_base_fingerprint(sh_b).groupBy("doc").agg(*_minhash_aggs())
-    )
+    bands_b = minhash_bands(sh_b)
     candidates = (
         bands_b.join(
             index["bands"]
@@ -1432,13 +1509,8 @@ def delta_dedup_matches(
     # exchange measured as pure overhead here (see shingle_df)
     sh_d = _materialize(shingle_df(delta, id_col, text_col, n, spread=False))
     if base_bands is None:
-        sh_b_full = shingle_df(base, id_col, text_col, n)
-        base_bands = _banded(
-            _with_base_fingerprint(sh_b_full).groupBy("doc").agg(*_minhash_aggs())
-        )
-    delta_bands = _banded(
-        _with_base_fingerprint(sh_d).groupBy("doc").agg(*_minhash_aggs())
-    )
+        base_bands = minhash_bands(shingle_df(base, id_col, text_col, n))
+    delta_bands = minhash_bands(sh_d)
     cand = (
         delta_bands.alias("d")
         .join(
@@ -1513,7 +1585,7 @@ def lsh_band_sweep(
     |configs| bucketed self-joins over the sample.
 
     Band keys here are md5 of the comma-joined row values (engine-
-    portable, any rows_per_band); the production path (_banded) packs
+    portable, any rows_per_band); the production path (minhash_bands) packs
     4x15-bit values into one BIGINT — same collision semantics where
     both apply, cheaper shuffle bytes, but capped at 4 rows/band.
     """

@@ -645,7 +645,7 @@ def _assign_seeded_argmax_kernel(pts: DataFrame, seeds) -> DataFrame:
       Python repr is shortest-roundtrip like the JVM's, and ONLY the
       boundary window can disagree between the two paths. -0.0 results
       normalize to +0.0 (BigDecimal has no signed zero);
-    - argmax tie rule: seeds arrive sorted by seed_id ascending and
+    - argmax tie rule: seeds are sorted by seed_id ascending here and
       np.argmax takes the FIRST maximum — exactly max(-seed_id);
     - u passes through, replacing the SQL form's join-back;
     - NULL semantics mirror the SQL form exactly (pinned by the
@@ -658,13 +658,13 @@ def _assign_seeded_argmax_kernel(pts: DataFrame, seeds) -> DataFrame:
       that all-NULL fallback; with NO seeds at all the SQL form's
       inner join produces an EMPTY frame, and so does the kernel.
 
-    `seeds`: [(seed_id, [float, ...] | None), ...] sorted by seed_id.
+    `seeds`: [(seed_id, [float, ...] | None), ...] in any order.
     """
     import pyarrow as pa
 
     seed_list = [
         (int(s), None if vec is None else [float(x) for x in vec])
-        for s, vec in seeds
+        for s, vec in sorted(seeds, key=lambda sv: int(sv[0]))
     ]
 
     def kernel(batches):

@@ -33,7 +33,8 @@ from pyspark.sql import DataFrame
 # a full plan-to-RDD conversion (analysis -> optimization -> physical
 # planning) PER CALL — measurable driver time when ~30 call sites each
 # probe per query construction. The count it returns is a function of
-# (leaf file set, maxPartitionBytes, default parallelism) for the
+# (leaf file set, maxPartitionBytes, openCostInBytes, minPartitionNum,
+# default parallelism) — the inputs of Spark's file split — for the
 # scan-projection frames this helper is called on, so one probe per
 # distinct file set serves every later call in the session. A cache
 # hit costs one walk of the frame's ALREADY-analyzed plan
@@ -70,10 +71,13 @@ def spread_small_scan(df: DataFrame) -> DataFrame:
         # no-default get: returns the conf's session default when
         # unset (a passed default string is TYPE-VALIDATED by Spark 4
         # and '' is not a bytes value)
+        conf = df.sparkSession.conf
         key = (
             tuple(sorted(files)),
             target,
-            df.sparkSession.conf.get("spark.sql.files.maxPartitionBytes"),
+            conf.get("spark.sql.files.maxPartitionBytes"),
+            conf.get("spark.sql.files.openCostInBytes"),
+            conf.get("spark.sql.files.minPartitionNum"),
         )
         n = _PART_CACHE.get(key)
     if n is None:

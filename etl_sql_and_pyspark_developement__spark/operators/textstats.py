@@ -72,14 +72,6 @@ def _isin_pred(markers: tuple[str, ...]):
     return lambda t: t.isin(*markers)
 
 
-def lang_scores(text_col: str = "text") -> dict[str, Column]:
-    toks = tokens(F.col(text_col))
-    return {
-        lang: F.size(F.filter(toks, _isin_pred(markers)))
-        for lang, markers in LANG_MARKERS.items()
-    }
-
-
 def predict_lang(df: DataFrame, text_col: str = "text") -> DataFrame:
     """Argmax language over marker-token scores; 'und' when no evidence.
 

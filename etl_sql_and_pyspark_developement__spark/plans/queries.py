@@ -1302,6 +1302,9 @@ def d03_dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     arithmetic both engines share, so the DuckDB oracle mirrors the
     whole probabilistic pipeline value-for-value; recall vs exact
     Jaccard is additionally property-tested with planted near-dups.
+    Spark computes the md5 halves per shingle; one mapInArrow NumPy
+    kernel (dedup.minhash_bands) turns them into the band table, in
+    place of a 128-aggregate HashAggregate and a 32-struct explode.
     """
     from etl_sql_and_pyspark_developement__spark.operators.dedup import (
         minhash_lsh_pairs,
@@ -9540,6 +9543,8 @@ def q129_file_metadata_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     can never trace back (SQL/*.txt query tables, not lineage); this
     is the surface that closes that gap in a lake.
     """
+    from pyspark.sql.types import IntegerType, StructField, StructType
+
     from etl_sql_and_pyspark_developement__spark.sources.io import (
         bucketed_files_path,
     )
@@ -9550,9 +9555,10 @@ def q129_file_metadata_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     # explicit read schema (source schema + the bucket partition col):
     # schema inference over partition dirs fails outright on an
     # empty-corpus fixture, and production readers pin schemas anyway
-    schema = cached_parquet(
-        spark, os.path.join(sf_dir, "orders.parquet")
-    ).schema.add("bucket", "integer")
+    schema = StructType(
+        cached_parquet(spark, os.path.join(sf_dir, "orders.parquet")).schema.fields
+        + [StructField("bucket", IntegerType())]
+    )
     df = spark.read.schema(schema).parquet(path)
     return (
         df.select(

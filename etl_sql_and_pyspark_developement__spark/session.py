@@ -64,46 +64,6 @@ def get_spark(
     )
 
 
-CLUSTER_PRESET = {
-    # The settings that change when this engine moves from local[32]
-    # to a 1000-executor cluster reading 100 TB. Everything else in
-    # get_spark (AQE, UTC, Arrow, broadcast threshold) carries over.
-    #
-    # shuffle partitions ≈ total shuffle bytes / 128 MB target;
-    # AQE coalesces down, so err high. 100 TB input with ~10x
-    # reduction before the big shuffles → ~100k initial partitions.
-    "spark.sql.shuffle.partitions": "100000",
-    "spark.sql.adaptive.advisoryPartitionSizeInBytes": "128m",
-    # skew: let AQE split anything over 256 MB / 5x median
-    "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes": "256m",
-    "spark.sql.adaptive.skewJoin.skewedPartitionFactor": "5",
-    # executors: dynamic allocation against the cluster manager
-    "spark.dynamicAllocation.enabled": "true",
-    "spark.dynamicAllocation.shuffleTracking.enabled": "true",
-    # stability at scale
-    "spark.sql.files.maxPartitionBytes": "134217728",
-    "spark.shuffle.service.enabled": "true",
-    "spark.speculation": "true",
-}
-
-
-def get_cluster_spark(app_name: str = "etl-sql-pyspark-engine") -> SparkSession:
-    """Session factory for a real cluster (spark-submit provides the
-    master); applies CLUSTER_PRESET on top of the standard config."""
-    builder = SparkSession.builder.appName(app_name)
-    for k, v in CLUSTER_PRESET.items():
-        builder = builder.config(k, v)
-    return (
-        builder.config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .getOrCreate()
-    )
-
-
 def configure_existing(spark: SparkSession) -> SparkSession:
     """Apply the runtime-settable subset of our config to a session we
     did not create (the driver hands us one in ``entry``)."""

@@ -13,6 +13,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 TABLES = (
     "region",
@@ -47,7 +48,10 @@ BROADCAST_DIMS = ("region", "nation", "supplier")
 # are immutable per path (sf testdata never changes within a process;
 # fixture artifacts are content-keyed — a rebuilt fixture gets a NEW
 # path). Do not route mutable/overwritten paths through this helper.
-_SCHEMA_CACHE: dict[str, object] = {}
+# The cache holds its OWN copy of the schema: the miss path returns a
+# frame whose .schema is a live StructType that callers may extend in
+# place (StructType.add mutates), which must not reach later reads.
+_SCHEMA_CACHE: dict[str, StructType] = {}
 
 
 def cached_parquet(spark: SparkSession, path: str) -> DataFrame:
@@ -57,7 +61,7 @@ def cached_parquet(spark: SparkSession, path: str) -> DataFrame:
     schema = _SCHEMA_CACHE.get(path)
     if schema is None:
         df = spark.read.parquet(path)
-        _SCHEMA_CACHE[path] = df.schema
+        _SCHEMA_CACHE[path] = StructType.fromJson(df.schema.jsonValue())
         return df
     return spark.read.schema(schema).parquet(path)
 

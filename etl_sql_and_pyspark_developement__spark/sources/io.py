@@ -119,7 +119,8 @@ def read_orc(spark: SparkSession, path: str) -> DataFrame:
     schema = _ORC_SCHEMA_CACHE.get(path)
     if schema is None:
         df = spark.read.orc(path)
-        _ORC_SCHEMA_CACHE[path] = df.schema
+        # own copy, as in catalog.cached_parquet
+        _ORC_SCHEMA_CACHE[path] = StructType.fromJson(df.schema.jsonValue())
         return df
     return spark.read.schema(schema).orc(path)
 
@@ -206,16 +207,6 @@ def xml_orders_fixture(
         ),
     )
     return path
-
-
-def read_jdbc(spark: SparkSession, url: str, dbtable: str, **options) -> DataFrame:
-    """JDBC source. Requires the driver jar on the classpath; pass
-    partitionColumn/lowerBound/upperBound/numPartitions for parallel
-    reads — a single-connection JDBC scan does not scale."""
-    reader = spark.read.format("jdbc").option("url", url).option("dbtable", dbtable)
-    for k, v in options.items():
-        reader = reader.option(k, v)
-    return reader.load()
 
 
 def read_delta(spark: SparkSession, path: str) -> DataFrame:
@@ -593,9 +584,6 @@ def partitioned_events_artifact(
             "event_day", F.date_format("ts", "yyyy-MM-dd")
         )
 
-    from pyspark.sql.types import StringType
-
-    schema = cached_parquet(spark, src).schema.add("event_day", StringType())
     return _staged_artifact(
         spark,
         _EVENTS_BY_DAY_NAME,
@@ -604,7 +592,18 @@ def partitioned_events_artifact(
         build,
         artifact_dir=artifact_dir,
         partition_by=["event_day"],
-        read_schema=schema,
+        read_schema=_events_by_day_schema(spark, src),
+    )
+
+
+def _events_by_day_schema(spark: SparkSession, src: str) -> StructType:
+    """The events source schema plus the event_day partition column —
+    a NEW StructType, never an in-place add on a cached one."""
+    from pyspark.sql.types import StringType, StructField
+
+    return StructType(
+        cached_parquet(spark, src).schema.fields
+        + [StructField("event_day", StringType())]
     )
 
 
@@ -622,16 +621,13 @@ def partitioned_events_path(
     (_artifact_dest)."""
     import os
 
-    from pyspark.sql.types import StringType
-
     partitioned_events_artifact(spark, sf_dir, artifact_dir=artifact_dir)
     src = os.path.join(sf_dir, "events.parquet")
-    schema = cached_parquet(spark, src).schema.add("event_day", StringType())
     return (
         _artifact_dest(
             _EVENTS_BY_DAY_NAME, src, _EVENTS_BY_DAY_PARAMS, artifact_dir
         ),
-        schema,
+        _events_by_day_schema(spark, src),
     )
 
 
@@ -698,19 +694,12 @@ def minhash_index_artifact(
 
     def build(s: SparkSession) -> DataFrame:
         from etl_sql_and_pyspark_developement__spark.operators.dedup import (
-            _banded,
-            _minhash_aggs,
-            _with_base_fingerprint,
+            minhash_bands,
             shingle_df,
         )
 
         base = s.read.parquet(src).filter("doc_id % 10 != 7")
-        sigs = (
-            _with_base_fingerprint(shingle_df(base, "doc_id", "text", 3))
-            .groupBy("doc")
-            .agg(*_minhash_aggs())
-        )
-        return _banded(sigs)
+        return minhash_bands(shingle_df(base, "doc_id", "text", 3))
 
     from etl_sql_and_pyspark_developement__spark.operators.dedup import (
         N_BANDS,

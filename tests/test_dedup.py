@@ -742,3 +742,117 @@ def test_lsh_band_sweep_monotone_in_rows_per_band(spark):
         assert 0 <= r.precision_ppm <= 1000000
     # identical-tail docs are true near-dups the loosest banding finds
     assert out[2].n_true_pairs > 0 and out[2].n_hits > 0
+
+
+def _sql_signatures(sh):
+    """The retired SQL signature form — 128 MIN aggregates of
+    pmod(a1*hi + a2*lo + b, p) over the md5 base fingerprint — kept as
+    the reference the Arrow kernel must reproduce value-for-value."""
+    from etl_sql_and_pyspark_developement__spark.operators.dedup import (
+        _MERSENNE_P,
+        _MIX_A1,
+        _MIX_A2,
+        _MIX_B,
+        N_MINHASH,
+        _with_base_fingerprint,
+    )
+
+    return _with_base_fingerprint(sh).groupBy("doc").agg(
+        *[
+            F.expr(
+                f"min(pmod({_MIX_A1[j]} * __hi + {_MIX_A2[j]} * __lo"
+                f" + {_MIX_B[j]}, {_MERSENNE_P}))"
+            ).alias(f"mh_{j}")
+            for j in range(N_MINHASH)
+        ]
+    )
+
+
+def _sql_bands(sigs):
+    """The retired SQL band explode: 32 structs of 4 minhash values
+    packed 15 bits each into one BIGINT key."""
+    from etl_sql_and_pyspark_developement__spark.operators.dedup import N_BANDS
+
+    band_cols = [
+        F.struct(
+            F.lit(b).alias("band_id"),
+            F.expr(
+                " + ".join(
+                    f"pmod(mh_{b * 4 + r}, {1 << 15}) * {1 << (15 * r)}"
+                    for r in range(4)
+                )
+            ).alias("band_hash"),
+        )
+        for b in range(N_BANDS)
+    ]
+    return sigs.select(
+        "doc", F.explode(F.array(*band_cols)).alias("band")
+    ).select("doc", "band.band_id", "band.band_hash")
+
+
+def test_minhash_kernel_matches_sql_form(spark, planted):
+    """minhash_bands / minhash_signatures (one mapInArrow kernel) equal
+    the retired 128-aggregate battery and band explode row-for-row, on
+    the planted corpus plus every NULL/empty/partitioning edge."""
+    from collections import Counter
+
+    from pyspark.sql.types import LongType, StringType, StructField, StructType
+
+    from etl_sql_and_pyspark_developement__spark.operators.dedup import (
+        minhash_bands,
+        minhash_signatures,
+        shingle_df,
+    )
+
+    schema = StructType(
+        [StructField("doc_id", LongType()), StructField("text", StringType())]
+    )
+    edge_rows = [
+        # duplicate doc id: its two rows start in different partitions
+        (104, BASE.replace("quick", "slow")),
+        (100, None),  # NULL text: one NULL shingle, NULL signature
+        (None, BASE),  # NULL doc id groups like any other key
+        (101, "two words"),  # fewer than n tokens: one whole-doc shingle
+        (102, "one"),
+        (103, ""),
+        (104, "an entirely different second row for the same id"),
+    ]
+    edges = spark.createDataFrame(
+        spark.sparkContext.parallelize(edge_rows, 2), schema
+    )
+    assert len(
+        {i for i, rows in enumerate(edges.rdd.glom().collect())
+         for r in rows if r.doc_id == 104}
+    ) == 2
+    empty = spark.createDataFrame([], schema)
+
+    def check(df):
+        sh = shingle_df(df, "doc_id", "text", 3, spread=False)
+        want_sigs = Counter(tuple(r) for r in _sql_signatures(sh).collect())
+        got_sigs = Counter(
+            tuple(r) for r in minhash_signatures(df, "doc_id", "text", sh=sh).collect()
+        )
+        assert got_sigs == want_sigs
+        want = Counter(tuple(r) for r in _sql_bands(_sql_signatures(sh)).collect())
+        got_df = minhash_bands(sh)
+        assert got_df.columns == ["doc", "band_id", "band_hash"]
+        got = Counter(tuple(r) for r in got_df.collect())
+        assert got == want
+        return got
+
+    check(planted)
+    bands = check(edges)
+    null_text = [k for k in bands.elements() if k[0] == 100]
+    assert len(null_text) == 32 and all(k[2] is None for k in null_text)
+    assert sum(1 for k in bands.elements() if k[0] is None) == 32
+    assert sum(1 for k in bands.elements() if k[0] == 104) == 32
+    assert not check(empty)
+
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "7")
+    try:
+        check(planted)
+        check(edges)
+    finally:
+        spark.conf.set(key, old)

@@ -964,3 +964,22 @@ def test_q135_default_columns_evolve_without_rewrite(spark, sf_dir, tmp_path):
     t2 = spark.table(name)
     assert {"quality_tier", "review_pass"} <= set(t2.columns)
     assert t2.filter(F.col("doc_id") < 0).count() == 2
+
+
+def test_schema_cache_not_poisoned_by_partitioned_events(
+    spark, sf_dir, tmp_path, monkeypatch
+):
+    """A read that extends a cached schema (the day-partitioned events
+    artifact adds event_day) must not write back into the per-path
+    cache: when it is the FIRST reader of events.parquet, later catalog
+    reads of the same path must not gain a phantom column."""
+    from etl_sql_and_pyspark_developement__spark.sources import catalog
+    from etl_sql_and_pyspark_developement__spark.sources import io as io_mod
+
+    monkeypatch.setattr(catalog, "_SCHEMA_CACHE", {})
+    monkeypatch.setenv("SPARK_GRAFT_ARTIFACT_DIR", str(tmp_path / "ev_artifacts"))
+    _, schema = io_mod.partitioned_events_path(spark, sf_dir)
+    names = schema.fieldNames()
+    assert len(names) == len(set(names)), names
+    assert names[-1] == "event_day"
+    assert "event_day" not in catalog.table(spark, sf_dir, "events").columns

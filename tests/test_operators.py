@@ -1012,3 +1012,24 @@ def test_q88_is_not_vacuous_and_guard_raises_on_degenerate_data(
     ).write.mode("overwrite").parquet(f"{degenerate}/events.parquet")
     with pytest.raises(SparkRuntimeException, match="failed to split"):
         QUERIES["q88_survival_km"](spark, degenerate).collect()
+
+
+def test_spread_probe_cache_keys_on_split_conf(spark, sf_dir, monkeypatch):
+    """The partition-count probe depends on every file-split input:
+    changing openCostInBytes mid-session must probe again, not reuse
+    the count cached under the old setting."""
+    from etl_sql_and_pyspark_developement__spark.operators import spread
+
+    monkeypatch.setattr(spread, "_PART_CACHE", {})
+    df = spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id")
+    spread.spread_small_scan(df)
+    spread.spread_small_scan(df)
+    assert len(spread._PART_CACHE) == 1
+    key = "spark.sql.files.openCostInBytes"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "1")
+    try:
+        spread.spread_small_scan(df)
+    finally:
+        spark.conf.set(key, old)
+    assert len(spread._PART_CACHE) == 2

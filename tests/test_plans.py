@@ -136,6 +136,37 @@ def test_d03_band_frame_materialized_for_self_join(spark, sf_dir):
     assert "InMemoryTableScan" not in plan, "persist regressed (see _materialize)"
 
 
+def test_d03_signatures_one_arrow_kernel(spark, sf_dir, monkeypatch):
+    """d03's minhash signatures and band keys come from ONE mapInArrow
+    kernel (dedup.minhash_bands) inside the band-frame barrier: no
+    executed plan of the lane, barriers included, holds the
+    128-aggregate minhash HashAggregate."""
+    from etl_sql_and_pyspark_developement__spark.operators import dedup
+    from etl_sql_and_pyspark_developement__spark.plans.inspect import (
+        _walk_executed,
+    )
+
+    materialized = []
+    real = dedup._materialize
+
+    def spy(df):
+        materialized.append(df)
+        return real(df)
+
+    monkeypatch.setattr(dedup, "_materialize", spy)
+    out = QUERIES["d03_dedup_minhash_lsh"](spark, sf_dir)
+    out.collect()
+    names, widest_agg = [], 0
+    for df in materialized + [out]:
+        plan = df._jdf.queryExecution().executedPlan()
+        for node, name in _walk_executed(plan):
+            names.append(name)
+            if name == "HashAggregateExec":
+                widest_agg = max(widest_agg, node.aggregateExpressions().size())
+    assert names.count("MapInArrowExec") == 1, names
+    assert widest_agg < dedup.N_MINHASH
+
+
 def test_d04_signatures_materialized_for_self_join(spark, sf_dir):
     """Simhash signatures feed four subtrees (chunk-join sides + both
     verify joins) — must come from one materialization, not four

@@ -737,3 +737,47 @@ def test_vector_features_arrow_edge_cases(spark):
         .toString()
     )
     assert "MapInArrow" in plan or "ArrowEvalPython" in plan or "PythonMapInArrow" in plan
+
+
+def test_assign_kernel_seed_order_independent(spark):
+    """np.argmax's first-max tie rule equals the SQL form's
+    max(-seed_id) only over id-sorted seeds: seeds passed in reverse
+    must give the identical (cluster, cent) per point."""
+    from pyspark.sql.types import (
+        ArrayType,
+        DoubleType,
+        LongType,
+        StructField,
+        StructType,
+    )
+
+    from etl_sql_and_pyspark_developement__spark.operators.similarity import (
+        _assign_seeded_argmax_kernel,
+    )
+
+    schema = StructType(
+        [
+            StructField("id", LongType()),
+            StructField("u", ArrayType(DoubleType())),
+        ]
+    )
+    pts = spark.createDataFrame(
+        [
+            (0, [0.5, 0.5, 0.0, 0.0]),  # exact tie between seeds 10 and 11
+            (1, [0.0, 0.0, 0.0, 0.0]),  # ties across all seeds
+            (2, [0.1, 0.2, 0.3, 0.4]),
+            (3, None),
+        ],
+        schema,
+    )
+    seeds = [(10 + j, [1.0 if i == j else 0.0 for i in range(4)]) for j in range(4)]
+
+    def assign(s):
+        return {
+            r["id"]: (r["cluster"], repr(r["cent"]))
+            for r in _assign_seeded_argmax_kernel(pts, s).collect()
+        }
+
+    want = assign(seeds)
+    assert want[0][0] == 10 and want[1][0] == 10
+    assert assign(seeds[::-1]) == want
